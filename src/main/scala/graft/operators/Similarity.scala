@@ -2,8 +2,11 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
@@ -16,9 +19,9 @@ import org.apache.spark.sql.functions._
   *     assigned to its nearest centroid with a single shuffle-free
   *     codegen'd scan (centroids ride along as a broadcast literal
   *     array), queries probe only the closest `nprobe` buckets. At
-  *     100 TB the corpus would be written out partitioned by centroid
-  *     id, making the probe filter a partition-pruned read; recall is
-  *     tunable via nprobe.
+  *     100 TB the corpus is written out partitioned by centroid id
+  *     ([[writeIvfIndex]]) and a probe reads only its nprobe bucket
+  *     directories ([[probeIvfIndex]]); recall is tunable via nprobe.
   */
 object Similarity {
 
@@ -305,8 +308,9 @@ object Similarity {
     *      same as cosine). No crossJoin, no Window, no Exchange.
     *   3. The PROBE list (the query's nprobe nearest centroids) is
     *      computed on the driver, so probing is `cid isin (...)` — with
-    *      the corpus written out partitioned by cid this is partition
-    *      pruning, not even a filter scan.
+    *      the corpus written out partitioned by cid ([[writeIvfIndex]])
+    *      the probe reads only those bucket directories, not even a
+    *      filter scan.
     */
   def ivfTopK(s: SparkSession, dir: String, queryId: Long = 0L, k: Int = 5,
       numCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
@@ -315,7 +319,7 @@ object Similarity {
     val qvec = queryVector(e, queryId)
     topKByCosine(
       assignCentroids(e, centroids)
-        .filter(probeFilter(centroids, qvec, nprobe))
+        .filter(col("cid").isin(probeCids(centroids, qvec, nprobe): _*))
         .filter(col("vec_id") =!= queryId),
       qvec, k)
   }
@@ -409,17 +413,17 @@ object Similarity {
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
 
-  /** IVF step 3a — driver-side probe predicate: `cid` in the query's
-    * nprobe nearest centroids. */
-  private def probeFilter(centroids: Array[Array[Double]],
-      qvec: Array[Double], nprobe: Int): Column = {
-    val cids = centroids.zipWithIndex
+  /** IVF step 3a — the driver-side probe ranking every IVF path
+    * shares: the ids of the `nprobe` centroids nearest `qvec` by dot
+    * product (the centroids are unit vectors, so dot ranks as cosine),
+    * ties broken by the lower id. */
+  private def probeCids(centroids: Array[Array[Double]],
+      qvec: Array[Double], nprobe: Int): Seq[Int] =
+    centroids.toSeq.zipWithIndex
       .map { case (cv, i) => (cv.zip(qvec).map { case (a, b) => a * b }.sum, i) }
       .sortBy { case (d, i) => (-d, i) }
       .take(math.min(nprobe, centroids.length))
-      .map { case (_, i) => Int.box(i) }
-    col("cid").isin(scala.collection.immutable.ArraySeq.unsafeWrapArray(cids): _*)
-  }
+      .map(_._2)
 
   private def topKByCosine(candidates: DataFrame, qvec: Array[Double],
       k: Int): DataFrame =
@@ -432,25 +436,43 @@ object Similarity {
   // --- materialized index: the 100 TB probe path ------------------------
 
   /** Write the IVF index: the assigned corpus, PARTITIONED BY `cid` on
-    * disk. This turns the hypothetical in ivfTopK's step 3 into the real
-    * thing: a probe over the materialized index lists only the nprobe
-    * matching partition directories (PartitionFilters — pinned by
-    * SimilaritySpec), so at 100 TB a probe reads nprobe/numCentroids of
-    * the corpus, not all of it. One assignment scan + one shuffle-free
-    * write per ingest, amortized over every subsequent query.
+    * disk, one `cid=<c>` bucket directory per centroid that received
+    * rows. This turns the hypothetical in ivfTopK's step 3 into the real
+    * thing: a probe reads only the nprobe bucket directories it chose
+    * (see [[readIvfBuckets]]), so at 100 TB a probe reads
+    * nprobe/numCentroids of the corpus, not all of it. One assignment
+    * scan + one shuffle-free write per ingest, amortized over every
+    * subsequent query.
     *
-    * The centroids are persisted next to the data as `_centroids.csv`
-    * (underscore-prefixed → invisible to parquet directory listings), so
-    * a probe-side process can load them without re-fitting — at 100 TB a
-    * per-query re-fit would be the corpus scan the index exists to avoid. */
+    * Two sidecars sit next to the data (underscore-prefixed → invisible
+    * to parquet directory listings):
+    *   - `_schema.json`, the buckets' data schema, so a probe reads its
+    *     buckets without a schema-inference job;
+    *   - `_centroids.csv`, so a probe-side process can load the
+    *     centroids without re-fitting — at 100 TB a per-query re-fit
+    *     would be the corpus scan the index exists to avoid. It is
+    *     written last: its presence marks a complete index. */
   def writeIvfIndex(e: DataFrame, centroids: Array[Array[Double]],
       path: String): Unit = {
-    assignCentroids(e, centroids).write
-      .partitionBy("cid").mode("overwrite").parquet(path)
+    val assigned = assignCentroids(e, centroids)
+    assigned.write.partitionBy("cid").mode("overwrite").parquet(path)
+    Files.writeString(Paths.get(path, SchemaSidecar),
+      bucketSchema(assigned).json)
     val text = centroids.map(_.mkString(",")).mkString("\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_centroids.csv"), text)
+    Files.writeString(Paths.get(path, "_centroids.csv"), text)
   }
+
+  private val SchemaSidecar = "_schema.json"
+
+  /** The data schema of an assigned frame's bucket files: every column
+    * but the `cid` partition column. */
+  private def bucketSchema(assigned: DataFrame): StructType =
+    StructType(assigned.schema.filterNot(_.name == "cid"))
+
+  /** Load the bucket data schema written by [[writeIvfIndex]]. */
+  private def readIvfSchema(path: String): StructType =
+    DataType.fromJson(Files.readString(Paths.get(path, SchemaSidecar)))
+      .asInstanceOf[StructType]
 
   /** Incremental ingest into a materialized index: assign `rows` against
     * the PERSISTED `_centroids.csv` (no re-fit — at 100 TB re-fitting on
@@ -461,33 +483,58 @@ object Similarity {
     * after build(part1) + append(part2) is identical to a probe after
     * build(part1 ∪ part2) with the same centroids — pinned by
     * SimilaritySpec. The append itself is shuffle-free: one codegen'd
-    * assignment scan over only the NEW rows, then a partitioned write. */
-  def appendToIvfIndex(s: SparkSession, path: String, rows: DataFrame): Unit =
-    assignCentroids(rows, readIvfCentroids(path)).write
-      .partitionBy("cid").mode("append").parquet(path)
+    * assignment scan over only the NEW rows, then a partitioned write.
+    *
+    * Probes read every bucket with the persisted `_schema.json`, so rows
+    * whose data schema differs from it (names or types; nullability
+    * aside) are refused before anything is written. */
+  def appendToIvfIndex(s: SparkSession, path: String, rows: DataFrame): Unit = {
+    val assigned = assignCentroids(rows, readIvfCentroids(path))
+    val expected = readIvfSchema(path)
+    val got = bucketSchema(assigned)
+    require(DataTypeUtils.equalsIgnoreNullability(got, expected),
+      s"appendToIvfIndex: rows have data schema ${got.simpleString} but " +
+        s"the index at $path was written with ${expected.simpleString}")
+    assigned.write.partitionBy("cid").mode("append").parquet(path)
+  }
 
   /** Load the centroid sidecar written by [[writeIvfIndex]]. */
   def readIvfCentroids(path: String): Array[Array[Double]] =
-    java.nio.file.Files
-      .readString(java.nio.file.Paths.get(path, "_centroids.csv"))
+    Files.readString(Paths.get(path, "_centroids.csv"))
       .split('\n').map(_.split(',').map(_.toDouble))
 
-  /** Exact top-k over a materialized index via a partition-pruned read
-    * of the query's nprobe nearest centroid buckets. */
+  /** Read the `cid=<c>` bucket directories of `cids` with the persisted
+    * `_schema.json`: no schema-inference job, and no listing of any
+    * other bucket. A bucket whose centroid received no rows was never
+    * written and is skipped. The read is rooted at the index
+    * (`basePath`), so `cid` comes back as a partition column. */
+  private def readIvfBuckets(s: SparkSession, path: String,
+      cids: Seq[Int]): DataFrame = {
+    val dirs = cids.distinct.sorted.map(c => Paths.get(path, s"cid=$c"))
+      .filter(Files.isDirectory(_)).map(_.toString)
+    s.read.schema(readIvfSchema(path)).option("basePath", path)
+      .parquet(dirs: _*)
+  }
+
+  /** Exact top-k over a materialized index: reads only the query's
+    * nprobe nearest centroid buckets ([[readIvfBuckets]]) and scores them
+    * in ONE Spark job. The per-query values — the query vector and the
+    * excluded id — enter the plan as array literals, which generated code
+    * references instead of inlining, so every query runs the same
+    * generated source and compiles nothing after the first. */
   def probeIvfIndex(s: SparkSession, path: String,
       centroids: Array[Array[Double]], qvec: Array[Double],
       excludeVecId: Long, k: Int = 5, nprobe: Int = 4): DataFrame =
     topKByCosine(
-      s.read.parquet(path)
-        .filter(probeFilter(centroids, qvec, nprobe))
-        .filter(col("vec_id") =!= excludeVecId),
+      readIvfBuckets(s, path, probeCids(centroids, qvec, nprobe))
+        .filter(!array_contains(typedLit(Seq(excludeVecId)), col("vec_id"))),
       qvec, k)
 
   /** Batch probe of a materialized index: top-k for EVERY query in
-    * `queries` = (query_id, qvec) from ONE partition-pruned read — the
-    * ANN-serving shape at 100 TB. The union of all queries' nprobe
-    * bucket ids drives PartitionFilters (reads ≤ M·nprobe of
-    * numCentroids buckets once, however much the probe sets overlap); a
+    * `queries` = (query_id, qvec) from ONE read of the union of all
+    * queries' nprobe bucket directories ([[readIvfBuckets]], which keeps
+    * `cid` for the pair join) — the ANN-serving shape at 100 TB. Each
+    * bucket is read once, however much the probe sets overlap; a
     * broadcast (query_id, cid) pair table then restricts each candidate
     * row to exactly the queries probing ITS bucket, so no query scores a
     * bucket outside its own probe set; per-query top-k is the bounded
@@ -497,25 +544,17 @@ object Similarity {
       centroids: Array[Array[Double]], queries: Seq[(Long, Array[Double])],
       k: Int = 5, nprobe: Int = 4): DataFrame = {
     val probePairs = probePairsFor(centroids, queries, nprobe)
-    val allCids = probePairs.map(_._2).distinct.map(Int.box)
     batchProbeCore(
-      s.read.parquet(path)
-        .filter(col("cid").isin(
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(allCids.toArray): _*)),
+      readIvfBuckets(s, path, probePairs.map(_._2)),
       probePairs, queries, k)
   }
 
   /** Driver-side probe plan for a query batch: each query's nprobe
-    * nearest centroid ids (the same ranking as [[probeFilter]]). */
+    * nearest centroid ids ([[probeCids]]). */
   private def probePairsFor(centroids: Array[Array[Double]],
       queries: Seq[(Long, Array[Double])], nprobe: Int): Seq[(Long, Int)] =
     queries.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex
-        .map { case (cv, i) =>
-          (cv.zip(qv).map { case (a, b) => a * b }.sum, i) }
-        .sortBy { case (d, i) => (-d, i) }
-        .take(math.min(nprobe, centroids.length))
-        .map { case (_, cid) => (qid, cid) }
+      probeCids(centroids, qv, nprobe).map(qid -> _)
     }
 
   /** Shared scoring tail for batch probes over cid-assigned candidates:
@@ -597,19 +636,20 @@ object Similarity {
     * write, amortized over every later probe — in the bench the build
     * lands in the untimed warm-up, so the timed iterations measure what a
     * 100 TB user pays per query: centroid sidecar read + one predicate-
-    * pushdown lookup of the query vector + a PartitionFilters-pruned read
-    * of nprobe buckets). The index lives under java.io.tmpdir keyed by the
+    * pushdown lookup of the query vector + a read of the nprobe chosen
+    * bucket directories with the `_schema.json` sidecar's schema). The
+    * index lives under java.io.tmpdir keyed by the
     * corpus path + a data fingerprint; both the fit and the assignment are
     * deterministic, so a rebuild is bit-identical to a cache hit. */
   /** Bumped whenever fit/assignment SEMANTICS change (zero-norm handling,
-    * scoring expression, banding): the version rides in the cache key so a
-    * pre-existing index built by older code can never be served for the
-    * same data. */
-  private val IndexVersion = 3
+    * scoring expression, banding) or the index LAYOUT changes (v4 added
+    * the `_schema.json` sidecar the probe reads): the version rides in
+    * the cache key so a pre-existing index built by older code can never
+    * be served for the same data. */
+  private val IndexVersion = 4
 
   def qIvfProbe(s: SparkSession, dir: String, queryId: Long = 0L, k: Int = 5,
       numCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    import java.nio.file.Paths
     // Cache key = corpus path + ALGORITHM VERSION + a DATA FINGERPRINT
     // (total bytes + max mtime of embeddings.parquet, file or directory):
     // regenerated testdata or changed fit/assignment semantics get a

@@ -2,11 +2,72 @@ package graft
 
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
+
+  private def dot(a: Array[Double], b: Array[Double]): Double =
+    a.zip(b).map { case (x, y) => x * y }.sum
+
+  /** Pins an index probe's read to its buckets: the files `probe` reads
+    * lie only under the `cid=<c>` directories of the nprobe centroids
+    * nearest each query vector (ranked here independently: dot
+    * descending, ties by id), and every chosen bucket that exists on
+    * disk contributes files. */
+  private def assertReadsChosenBuckets(probe: DataFrame, idx: Path,
+      centroids: Array[Array[Double]], qvecs: Seq[Array[Double]],
+      nprobe: Int): Unit = {
+    val chosen = qvecs.flatMap(q => centroids.indices
+      .sortBy(i => (-dot(centroids(i), q), i)).take(nprobe)).toSet
+    val expected = chosen.map(c => s"cid=$c")
+      .filter(d => Files.isDirectory(idx.resolve(d)))
+    val read = probe.inputFiles.toSeq
+      .map(f => Paths.get(new java.net.URI(f)).toAbsolutePath)
+    assert(read.nonEmpty, "probe reads no files")
+    read.foreach(f => assert(f.getParent.getParent === idx.toAbsolutePath,
+      s"$f is not a bucket file of $idx"))
+    assert(read.map(_.getParent.getFileName.toString).toSet === expected,
+      s"probe read buckets other than the chosen ${chosen.toSeq.sorted}")
+  }
+
+  /** Spark jobs started by `body`, counted by a SparkListener on the
+    * body's job group. Listener events arrive in order, so once the
+    * start of a sentinel job run after `body` is seen, every job of
+    * `body` has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`sentinel`) => flushed.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(sentinel, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("vector functions: dot / norm / cosine on known vectors") {
     val df = Seq((Array(1f, 0f, 2f), Array(3f, 4f, 0f))).toDF("a", "b")
@@ -138,12 +199,15 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       Similarity.ivfTopK(spark, sf0001, 0, 5, numCentroids = 8, nprobe = 4)
         .collect().map(_.toSeq).toSeq)
     // second call must hit the cached index (write-once/probe-many) and
-    // its read must be partition-pruned
+    // read only the query's nprobe bucket directories
     val again = Similarity.qIvfProbe(spark, sf0001, 0L, 5,
       numCentroids = 8, nprobe = 4)
-    val plan = again.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cid"),
-      s"probe does not prune partitions:\n$plan")
+    val idx = Paths.get(new java.net.URI(again.inputFiles.head))
+      .getParent.getParent
+    val e = Tables.embeddings(spark, sf0001)
+    assertReadsChosenBuckets(again, idx,
+      Similarity.readIvfCentroids(idx.toString),
+      Seq(Similarity.queryVector(e, 0L)), nprobe = 4)
   }
 
   test("materialized IVF index: partition-pruned probe equals in-memory IVF") {
@@ -155,10 +219,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     val qvec = Similarity.queryVector(e, 0L)
     val probed = Similarity.probeIvfIndex(spark, idx, centroids, qvec,
       excludeVecId = 0L, k = 5, nprobe = 4)
-    // the probe must be PARTITION pruning (directory-level), not a scan
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cid"),
-      s"probe does not prune partitions:\n$plan")
+    // the probe must prune at the directory level, not filter a scan
+    assertReadsChosenBuckets(probed, Paths.get(idx), centroids, Seq(qvec), 4)
     assert(probed.collect().map(_.toSeq).toSeq ===
       Similarity.ivfTopK(spark, sf0001, 0, 5, numCentroids = 8, nprobe = 4)
         .collect().map(_.toSeq).toSeq)
@@ -174,9 +236,11 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     val queries = qids.map(q => q -> Similarity.queryVector(e, q))
     val batch = Similarity.batchProbeIvfIndex(spark, idx, centroids, queries,
       k = 5, nprobe = 4)
+    // one read of the union of the three queries' bucket directories
+    assertReadsChosenBuckets(batch, Paths.get(idx), centroids,
+      queries.map(_._2), 4)
     val plan = batch.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cid"),
-      s"batch probe does not prune partitions:\n$plan")
+    assert(plan.split("FileScan").length === 2, s"not one read:\n$plan")
     assert(!plan.contains("Window"))
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -188,6 +252,80 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       assert(got.filter(_._1 == qid).toSeq === single.toSeq,
         s"batch != single for query $qid")
     }
+  }
+
+  test("a warm index probe is one Spark job and compiles no new code") {
+    val e = Tables.embeddings(spark, sf0001)
+    val centroids = Similarity.fitCentroids(e, numCentroids = 8)
+    val idx = Files.createTempDirectory("graft_ivf_warm")
+      .resolve("idx").toString
+    Similarity.writeIvfIndex(e, centroids, idx)
+    def probe(qid: Long, qvec: Array[Double]): Seq[Long] =
+      Similarity.probeIvfIndex(spark, idx, centroids, qvec,
+        excludeVecId = qid, k = 5, nprobe = 4).collect().map(_.getLong(0)).toSeq
+    val first = probe(0L, Similarity.queryVector(e, 0L))
+    // the next query's id and vector both differ from the first's; the
+    // vector is fetched before counting (that lookup is its own job)
+    val qvec = Similarity.queryVector(e, 1L)
+    assert(!qvec.sameElements(Similarity.queryVector(e, 0L)))
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var second = Seq.empty[Long]
+    val jobs = jobsStartedBy { second = probe(1L, qvec) }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    assert(jobs === 1, "a probe must not run a schema-inference or listing job")
+    assert(compiles === 0,
+      "per-query values must not be inlined into generated code")
+    assert(first.length === 5 && second.length === 5 && !second.contains(1L))
+  }
+
+  test("an empty bucket among the chosen ones is skipped, not an error") {
+    val e = Tables.embeddings(spark, sf0001)
+    val fitted = Similarity.fitCentroids(e, numCentroids = 8)
+    // a zero centroid is far from every vector: it wins no assignment
+    // (the fitted centroids' best dot is positive for every row), so its
+    // bucket directory is never written; for the query it ranks right
+    // after the centroids with a positive dot, so probing one bucket
+    // more than those probes it
+    val centroids = fitted :+ Array.fill(fitted(0).length)(0.0)
+    val idx = Files.createTempDirectory("graft_ivf_empty").resolve("idx")
+    Similarity.writeIvfIndex(e, centroids, idx.toString)
+    assert(!Files.exists(idx.resolve("cid=8")), "the far centroid got rows")
+    val qvec = Similarity.queryVector(e, 0L)
+    val ahead = fitted.count(c => dot(c, qvec) > 0)
+    assert(ahead > 0 && ahead < fitted.length,
+      s"fixture needs a partial probe set, got $ahead of ${fitted.length}")
+    val probed = Similarity.probeIvfIndex(spark, idx.toString, centroids,
+      qvec, excludeVecId = 0L, k = 5, nprobe = ahead + 1)
+    assertReadsChosenBuckets(probed, idx, centroids, Seq(qvec), ahead + 1)
+    assert(probed.collect().map(_.toSeq).toSeq ===
+      Similarity.ivfTopK(spark, sf0001, 0, 5, numCentroids = 8, nprobe = ahead)
+        .collect().map(_.toSeq).toSeq)
+  }
+
+  test("append refuses rows whose data schema differs from the index's") {
+    val e = Tables.embeddings(spark, sf0001)
+    val centroids = Similarity.fitCentroids(e, numCentroids = 8)
+    val idx = Files.createTempDirectory("graft_ivf_schema").resolve("idx")
+    Similarity.writeIvfIndex(e.filter(col("vec_id") < 40L), centroids,
+      idx.toString)
+    def files(): Set[Path] = {
+      val walk = Files.walk(idx)
+      try walk.toArray.map(_.asInstanceOf[Path]).toSet finally walk.close()
+    }
+    val before = files()
+    val renamed = e.filter(col("vec_id") >= 40L)
+      .withColumnRenamed("label", "tag")
+    val err = intercept[IllegalArgumentException] {
+      Similarity.appendToIvfIndex(spark, idx.toString, renamed)
+    }
+    assert(err.getMessage.contains("data schema"), err.getMessage)
+    assert(files() === before, "a refused append must write nothing")
+    // nullability alone is not a schema change
+    val nonNullIds = e.filter(col("vec_id") >= 40L)
+      .withColumn("vec_id", coalesce(col("vec_id"), lit(-1L)))
+    assert(!nonNullIds.schema("vec_id").nullable)
+    Similarity.appendToIvfIndex(spark, idx.toString, nonNullIds)
+    assert(files() !== before)
   }
 
   test("incremental append: build(part1)+append(part2) probes ≡ full rebuild") {
@@ -205,6 +343,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     Similarity.writeIvfIndex(e, centroids, full)
     // the appended index holds the whole corpus, assigned identically
     assert(spark.read.parquet(incr).count() === e.count())
+    assert(Files.readString(Paths.get(incr, "_schema.json")) ===
+      Files.readString(Paths.get(full, "_schema.json")))
     for (qid <- Seq(0L, 1L, 2L)) {
       val qvec = Similarity.queryVector(e, qid)
       val a = Similarity.probeIvfIndex(spark, incr, centroids, qvec,
